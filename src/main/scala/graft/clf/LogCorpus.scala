@@ -93,12 +93,12 @@ object LogCorpus {
     * narrowest possible payload (vs the 15 parsed columns), the range
     * exchange keys on the 8-byte BIGINT (vs worst-case shared-prefix
     * string compares), its output supplies the parse's data-parallelism,
-    * and the post-sort parse is [[LogParser.parseSepFree]]'s single regex
-    * run per row — the corpus is printable-ASCII, separator-free by
-    * construction. At 100 TB the sort disappears entirely (replaced by a
-    * partitioned write); it exists for the oracle hash gate. */
+    * and the post-sort parse is [[LogParser.parse]] — one regex run per
+    * row — with `line_id` passed through ahead of the parsed fields. At
+    * 100 TB the sort disappears entirely (replaced by a partitioned
+    * write); it exists for the oracle hash gate. */
   def parsedValidVolume(spark: SparkSession): DataFrame =
-    LogParser.parseSepFree(corpus(spark).orderBy("line_id"), Seq("line_id"))
+    LogParser.parse(corpus(spark).orderBy("line_id"), Seq("line_id"))
       .where(col("host") =!= "")
       .select(col("line_id"), col("raw"), col("host"), col("day"), col("month"), col("year"),
         col("hour"), col("minute"), col("second"), col("timezone"),

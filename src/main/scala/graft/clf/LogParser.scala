@@ -1,7 +1,10 @@
 package graft.clf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+
+import graft.functions.ClfParse
 
 /** Common Log Format schema + parser — the reference's native input domain.
   *
@@ -12,11 +15,12 @@ import org.apache.spark.sql.functions._
   * negative offsets, HTTP version only 1.0/V1.0, no spaces in paths,
   * bytes is 1–9 digits or `-` (null).
   *
-  * Parsing is pure column expressions (regexp_extract × groups + guarded
-  * to_timestamp) — NOT a Scala UDF: the reference's row-at-a-time
-  * `parseLogline` map (StreamingJob.scala:112–138) would put a Ser/De
-  * barrier in the plan; this version stays inside whole-stage codegen and
-  * lets the validity filter push into the scan.
+  * Parsing is one codegen'd Catalyst kernel, [[graft.functions.ClfParse]]:
+  * one regex run per line destructures all 13 groups, like the reference's
+  * `parseLogline` match (StreamingJob.scala:112–138), but without a Scala
+  * UDF's row Ser/De barrier — the kernel stays inside whole-stage codegen.
+  * Its values equal the 13-call `regexp_extract` + `to_timestamp` SQL form
+  * (the DuckDB oracle's), errors included (PropertySpec pins that).
   */
 object LogParser {
 
@@ -36,93 +40,20 @@ object LogParser {
       date: java.sql.Timestamp, httpMethod: String, ressource: String,
       httpVersion: String, httpReplyCode: Int, replyBytes: Option[Int])
 
-  /** Group separator for the single-pass extraction — a control char that
-    * cannot appear in CLF lines (hosts/paths/tokens are printable ASCII;
-    * the corpus generator and the NASA trace contain none). */
-  private val Sep = ""
-
-  /** value:string → the 15-column LogLine schema. Unparseable lines keep
-    * `raw` and get null/sentinel fields (reference StreamingJob.scala:135:
-    * LogLine(raw = line)).
-    *
-    * Single-pass extraction: 13 separate `regexp_extract(v, P, i)` calls
-    * each re-run the full 13-group match (codegen CSE can't merge them —
-    * the group index differs), which dominated the 1.57M-line parse. One
-    * `regexp_replace` rewrites a matching line to all 13 groups
-    * ``-joined, `split` fans them out, and every field references
-    * the SAME subexpression — whole-stage codegen evaluates the regex
-    * once per row. `rlike` (the second and last regex run) stays the
-    * match authority, so valid/dead-letter classification is exactly the
-    * reference's regex semantics even for pathological inputs where the
-    * replace trick would mis-split. */
-  def parse(lines: DataFrame): DataFrame = {
-    val v = col("value")
-    // Stage 1 computes the match bit and the group array ONCE per row
-    // behind a projection boundary: both are referenced 13+ times below,
-    // and CollapseProject declines to inline non-cheap expressions with
-    // multiple references, so the regex runs exactly twice per row
-    // regardless of how many fields stage 2 derives.
-    fields(lines.select(
-      v.as("raw"),
-      v.rlike(Pattern).as("m"),
-      split(regexp_replace(v, Pattern, (1 to 13).map("$" + _).mkString(Sep)), Sep).as("g")))
-  }
-
-  /** ONE-regex-per-row variant of [[parse]] for inputs guaranteed free of
-    * the `` group separator (any corpus of printable-ASCII lines —
-    * [[graft.clf.LogCorpus]] by construction, the NASA trace in fact).
-    * Under that precondition the replace trick is itself the match
-    * authority: an anchored pattern either rewrites the whole line to 13
-    * ``-joined groups (`size(g) = 13`) or leaves it untouched
-    * (`size(g) = 1`), so the separate `rlike` run — half the regex cost of
-    * the 1.57M-line parse — is redundant. [[parse]] keeps `rlike` for
-    * inputs that could smuggle the separator. */
-  def parseSepFree(lines: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
-    val v = col("value")
+  /** value:string → `passthrough` columns, `raw`, then the LogLine fields
+    * and `date_ref_buggy` (the reference's seconds-as-millis timestamp,
+    * StreamingJob.scala:125–126, SURVEY.md §0). Unparseable lines keep
+    * `raw` and get `""` strings and null ints/dates (reference
+    * StreamingJob.scala:135: LogLine(raw = line)). The kernel runs once
+    * per line in its own projection; the field extraction above it reads
+    * the struct. */
+  def parse(lines: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
     val keep = passthrough.map(col)
-    fields(lines
-      .select(keep ++ Seq(
-        v.as("raw"),
-        split(regexp_replace(v, Pattern, (1 to 13).map("$" + _).mkString(Sep)), Sep).as("g")): _*)
-      .select(keep ++ Seq(col("raw"), (size(col("g")) === 13).as("m"), col("g")): _*),
-      passthrough)
-  }
-
-  /** Stage 2 shared by the parse variants: staged must carry `raw`, the
-    * match bit `m`, and the 13-group array `g`; `passthrough` columns are
-    * retained ahead of the parsed fields. */
-  private def fields(staged: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
-    val matched = col("m")
-    // "" on no match — the regexp_extract contract downstream code keys on
-    def grp(i: Int): Column = when(matched, element_at(col("g"), i)).otherwise(lit(""))
-    def intGrp(i: Int): Column = nullif(grp(i), lit("")).try_cast("int")
-    val tsStr = concat_ws(" ",
-      concat_ws("/", element_at(col("g"), 2), element_at(col("g"), 3), element_at(col("g"), 4)),
-      concat_ws(":", element_at(col("g"), 5), element_at(col("g"), 6), element_at(col("g"), 7)),
-      element_at(col("g"), 8))
-    // Intended semantics: a real UTC instant. Guarded by `matched` so
-    // garbage lines yield null instead of an ANSI parse error.
-    val ts = to_timestamp(when(matched, tsStr), "dd/MMM/yyyy HH:mm:ss Z")
-    staged.select(passthrough.map(col) ++ Seq(
-      col("raw"),
-      grp(1).as("host"),
-      intGrp(2).as("day"),
-      grp(3).as("month"),
-      intGrp(4).as("year"),
-      intGrp(5).as("hour"),
-      intGrp(6).as("minute"),
-      intGrp(7).as("second"),
-      grp(8).as("timezone"),
-      ts.as("date"),
-      // Output parity with the reference's seconds-as-millis bug
-      // (StreamingJob.scala:125–126, SURVEY.md §0): epoch-seconds value
-      // interpreted as milliseconds.
-      timestamp_millis(unix_timestamp(ts)).as("date_ref_buggy"),
-      grp(9).as("httpMethod"),
-      grp(10).as("ressource"),
-      grp(11).as("httpVersion"),
-      intGrp(12).as("httpReplyCode"),
-      intGrp(13).as("replyBytes")): _*)
+    val ansi = lines.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+    val kernel = ClfParse(ColumnBridge.expr(col("value")), failOnError = ansi)
+    lines
+      .select(keep ++ Seq(col("value").as("raw"), ColumnBridge.of(kernel).as("p")): _*)
+      .select(keep ++ Seq(col("raw"), col("p.*")): _*)
   }
 
   /** Valid rows (reference parseLoglines, StreamingJob.scala:141–143). */

@@ -17,6 +17,9 @@ import graft.sources.Tables
   * Scale notes (100 TB): every query here is scan → partial agg → one
   * shuffle on the group keys → final agg. No driver-side collection, no
   * row-at-a-time lambdas; everything stays in whole-stage codegen.
+  * Q1–Q3 emit one row per 31-day window, so they finish with
+  * `coalesce(1).sortWithinPartitions`: a global `orderBy` would add a
+  * range exchange and its sampling job to sort those few rows.
   */
 object EventAnalytics {
 
@@ -38,7 +41,7 @@ object EventAnalytics {
       .groupBy(col("w_start"))
       .agg(max(struct(col("cnt"), col("user_id"))).as("top"))
       .select(col("w_start"), col("top.user_id").as("user_id"), col("top.cnt").as("cnt"))
-      .orderBy("w_start")
+      .coalesce(1).sortWithinPartitions("w_start")
   }
 
   /** Q2 — number of unique clients per window (reference
@@ -49,7 +52,7 @@ object EventAnalytics {
     Tables.events(spark, dir)
       .groupBy(w31(col("ts")))
       .agg(countDistinct(col("user_id")).as("uniq_users"))
-      .orderBy("w_start")
+      .coalesce(1).sortWithinPartitions("w_start")
 
   /** Q2 at scale — HLL sketch variant (approx_count_distinct), BAND-GATED
     * (r13): the exact form shuffles every distinct key; the sketch
@@ -83,7 +86,7 @@ object EventAnalytics {
       .agg(
         Det.floorAvg(coalesce(col("value"), lit(0))).as("avg_value_floor"),
         count(lit(1)).as("n_events"))
-      .orderBy("w_start")
+      .coalesce(1).sortWithinPartitions("w_start")
 
   /** The reference's *actual* output shape: its timestamp bug collapses all
     * data into one window (SURVEY.md §0), so each analytic degenerates to a

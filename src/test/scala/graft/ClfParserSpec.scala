@@ -48,6 +48,27 @@ class ClfParserSpec extends SparkSpec {
     assert(buggy === good / 1000) // millis field holds the epoch-second count
   }
 
+  test("U+0001 inside the host or path group is an ordinary character") {
+    // both lines match the regex (\S+ and [^ "]+ admit U+0001); a parse
+    // that splits the groups on a control character mangles them
+    val hostLine = "a\u0001b - - [01/Aug/1995:00:00:01 -0400] \"GET /x HTTP/1.0\" 200 17"
+    val pathLine = "h - - [01/Aug/1995:00:00:01 -0400] \"GET /p\u0001q HTTP/1.0\" 200 17"
+    val rows = LogParser.validLines(Seq(hostLine, pathLine).toDF("value"))
+      .collect().map(r => r.getAs[String]("raw") -> r).toMap
+    assert(rows.keySet === Set(hostLine, pathLine))
+    val h = rows(hostLine)
+    assert(h.getAs[String]("host") === "a\u0001b")
+    assert(h.getAs[String]("ressource") === "/x")
+    assert(h.getAs[Timestamp]("date").toInstant.toString === "1995-08-01T04:00:01Z")
+    val p = rows(pathLine)
+    assert(p.getAs[String]("host") === "h")
+    assert(p.getAs[String]("ressource") === "/p\u0001q")
+    assert(p.getAs[String]("httpVersion") === "HTTP/1.0")
+    assert(p.getAs[Int]("httpReplyCode") === 200)
+    assert(p.getAs[Int]("replyBytes") === 17)
+    assert(p.getAs[Timestamp]("date").toInstant.toString === "1995-08-01T04:00:01Z")
+  }
+
   test("dead letters include HTTP/1.1, non-dash user, positive tz, spaced path, garbage") {
     val dead = LogParser.deadLetters(fixture).as[String].collect().toSet
     assert(dead.exists(_.contains("HTTP/1.1")))

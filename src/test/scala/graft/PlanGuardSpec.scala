@@ -1,6 +1,14 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.catalyst.expressions.{GetTimestamp, RLike, RegExpReplace, StringSplit}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+
+import graft.clf.{LogAnalysisJob, LogParser}
+import graft.functions.ClfParse
+import graft.operators.EventAnalytics
 
 /** Mechanical quadratic-join sweep over the ENTIRE query surface.
   *
@@ -86,5 +94,34 @@ class PlanGuardSpec extends SparkSpec {
     }
     assert(stale.isEmpty,
       s"allowlisted queries no longer plan a nested-loop/cartesian — drop them: $stale")
+  }
+
+  test("the paper's six windowed outputs finalize in one partition: no range exchange") {
+    import spark.implicits._
+    val valid = LogParser.validLines(LogParser.FixtureLines.toDF("value"))
+    val outputs = Seq(
+      "busiestHost" -> LogAnalysisJob.busiestHost(valid, "date"),
+      "uniqueHosts" -> LogAnalysisJob.uniqueHosts(valid, "date"),
+      "avgReplyBytes" -> LogAnalysisJob.avgReplyBytes(valid, "date"),
+      "busiestUserPerWindow" -> EventAnalytics.busiestUserPerWindow(spark, sf0001),
+      "uniqueUsersPerWindow" -> EventAnalytics.uniqueUsersPerWindow(spark, sf0001),
+      "avgValuePerWindow" -> EventAnalytics.avgValuePerWindow(spark, sf0001))
+    outputs.foreach { case (name, df) =>
+      val ranged = shuffleExchanges(df).count(_.outputPartitioning.isInstanceOf[RangePartitioning])
+      assert(ranged === 0, s"$name sorts through a range exchange ($ranged)")
+    }
+  }
+
+  test("the CLF parse plans one ClfParse kernel and no regex/split/to_timestamp chain") {
+    val dir = Files.createTempDirectory("clf-plan")
+    Files.write(dir.resolve("access.log"), LogParser.FixtureLines.mkString("\n").getBytes)
+    val plan = LogParser.validLines(spark.read.text(dir.toString)).queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(exprs.count(_.isInstanceOf[ClfParse]) === 1,
+      s"the kernel must run once per line, not per field or again in a filter:\n$plan")
+    val chain = exprs.collect {
+      case e @ (_: RLike | _: RegExpReplace | _: StringSplit | _: GetTimestamp) => e.prettyName
+    }
+    assert(chain.isEmpty, s"parse chain left in the plan: ${chain.mkString(", ")}")
   }
 }

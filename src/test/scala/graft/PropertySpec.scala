@@ -1,14 +1,16 @@
 package graft
 
-import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.clf.LogParser
 import graft.operators.Multimodal
 
 /** ScalaCheck properties for the pure kernels (SURVEY.md §5.2.3).
   * Spark-free: the CLF regex, truncating-average arithmetic, and frame
-  * sampling are all testable without a session. */
+  * sampling are all testable without a session. The one exception is the
+  * CLF parse kernel, whose reference is a SQL form and is run through the
+  * shared test session. */
 object PropertySpec extends Properties("graft") {
 
   private val pattern = java.util.regex.Pattern.compile(LogParser.Pattern)
@@ -48,6 +50,112 @@ object PropertySpec extends Properties("graft") {
     forAll(genHost) { host =>
       !pattern.matcher(s"""$host - - [01/Aug/1995:00:00:00 -0400] "GET /a b HTTP/1.0" 200 1""").matches() &&
       !pattern.matcher(s"""$host - - [01/Aug/1995:00:00:00 -0400] "GET /a HTTP/1.1" 200 1""").matches()
+    }
+
+  // ClfParse ≡ the 13-call SQL form it replaced, on CLF-shaped lines
+  // that reach every branch: the four reject reasons, null lines, '-'
+  // and 9-digit (and 10-digit) byte counts, non-canonical months that
+  // Spark's case-insensitive formatter still parses, impossible dates,
+  // hours, minutes, seconds and offsets, a trailing Unicode line
+  // terminator (rlike's `find` accepts it), and U+0001 anywhere.
+  private val genClfLine: Gen[Option[String]] = {
+    def two(lo: Int, hi: Int): Gen[String] = Gen.choose(lo, hi).map(n => f"$n%02d")
+    def freq[T](common: Gen[T], rare: Gen[T]): Gen[T] = Gen.frequency(12 -> common, 1 -> rare)
+    // rarer, so that few lines per batch need their own ANSI-on check
+    def dateFreq[T](common: Gen[T], rare: Gen[T]): Gen[T] = Gen.frequency(40 -> common, 1 -> rare)
+    val line = for {
+      host <- freq(genHost, Gen.const("a\u0001b"))
+      ident <- freq(Gen.const(" - - "), Gen.const(" - alice "))
+      day <- dateFreq(two(1, 28), Gen.oneOf("00", "29", "30", "31", "32"))
+      month <- dateFreq(Gen.oneOf("Jan", "Feb", "Mar", "Apr", "May", "Jun", "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"),
+        Gen.oneOf("aug", "AUG", "Xyz", "Ja", "1"))
+      year <- dateFreq(Gen.oneOf("1995", "1996", "2000", "1900"), Gen.choose(0, 9999).map(n => f"$n%04d"))
+      hour <- dateFreq(two(0, 23), Gen.const("24"))
+      minute <- dateFreq(two(0, 59), Gen.const("60"))
+      second <- dateFreq(two(0, 59), Gen.const("60"))
+      dayMonthYear <- dateFreq(Gen.const(s"$day/$month/$year"), Gen.oneOf("31/Feb/1995",
+        "29/Feb/1995", "29/Feb/1900", "29/Feb/1996", "29/Feb/2000", "31/Apr/1995", "30/Feb/2000"))
+      tz <- dateFreq(Gen.oneOf("-0400", "-0500", "-0800"),
+        Gen.oneOf("-0000", "-1800", "-1759", "-1801", "-1900", "-0060", "-0959", "+0400"))
+      method <- Gen.oneOf("GET", "HEAD", "POST")
+      path <- freq(genPath, Gen.oneOf("/p\u0001q", "/a b.html"))
+      version <- freq(Gen.oneOf("HTTP/1.0", "HTTP/V1.0"), Gen.const("HTTP/1.1"))
+      code <- Gen.choose(100, 599)
+      bytes <- freq(Gen.choose(0, 99999).map(_.toString),
+        Gen.oneOf("-", "999999999", "1234567890"))
+      tail <- freq(Gen.const(""), Gen.oneOf("\u2028", " "))
+      ctl <- freq(Gen.const(-1), Gen.choose(0, 200))
+    } yield {
+      val l = s"""$host$ident[$dayMonthYear:$hour:$minute:$second $tz] "$method $path $version" $code $bytes$tail"""
+      if (ctl < 0) l else { val i = ctl % (l.length + 1); l.take(i) + "\u0001" + l.drop(i) }
+    }
+    Gen.frequency(25 -> line.map(Some(_)), 1 -> Gen.const(None))
+  }
+
+  private lazy val clfSessions: Map[Boolean, org.apache.spark.sql.SparkSession] =
+    Seq(true, false).map { ansi =>
+      val s = SparkSpec.session.newSession()
+      s.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      ansi -> s
+    }.toMap
+
+  /** The parse as regexp_extract per group + to_timestamp, the form the
+    * DuckDB oracle states (LogCorpus.validParseSql); a null line parses
+    * as the empty string, i.e. as a non-matching line. */
+  private def clfSqlForm(lines: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val v = coalesce(col("value"), lit(""))
+    def g(i: Int) = regexp_extract(v, LogParser.Pattern, i)
+    def int(i: Int) = nullif(g(i), lit("")).try_cast("int")
+    val ts = to_timestamp(when(g(1) =!= "", concat_ws(" ",
+      concat_ws("/", g(2), g(3), g(4)), concat_ws(":", g(5), g(6), g(7)), g(8))),
+      "dd/MMM/yyyy HH:mm:ss Z")
+    lines.select(col("id"), col("value"), g(1), int(2), g(3), int(4), int(5), int(6), int(7),
+      g(8), ts, timestamp_millis(unix_timestamp(ts)), g(9), g(10), g(11), int(12), int(13))
+  }
+
+  /** Both forms' rows, ordered by line id. `local` lines form a local
+    * relation, which the optimizer evaluates on the driver with
+    * interpreted expressions (no job, so an expected ANSI error costs no
+    * executor log); otherwise the lines are an RDD in two partitions and
+    * run through whole-stage codegen. */
+  private def clfRows(ansi: Boolean, lines: Seq[(Long, Option[String])], kernel: Boolean,
+      local: Boolean = false): Either[Throwable, Seq[Seq[Any]]] = {
+    val s = clfSessions(ansi)
+    import s.implicits._
+    val rows = lines.map { case (i, l) => (i, l.orNull) }
+    val df = (if (local) rows.toDF("id", "value") else s.sparkContext.parallelize(rows, 2).toDF("id", "value"))
+    val out = if (kernel) LogParser.parse(df, Seq("id")) else clfSqlForm(df)
+    try Right(out.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq)
+    catch { case e: Exception => Left(e) }
+  }
+
+  private def cannotParseTimestamp(r: Either[Throwable, _]): Boolean = r match {
+    case Left(e) => Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("CANNOT_PARSE_TIMESTAMP"))
+    case Right(_) => false
+  }
+
+  property("ClfParse kernel == regexp_extract + to_timestamp SQL form, ANSI off and on") =
+    Prop.forAllNoShrink(Gen.listOfN(40, genClfLine)) { drawn =>
+      val lines = drawn.zipWithIndex.map { case (l, i) => (i.toLong, l) }
+      val sqlOff = clfRows(ansi = false, lines, kernel = false)
+      val kernelOff = clfRows(ansi = false, lines, kernel = true)
+      val kernelOffLocal = clfRows(ansi = false, lines, kernel = true, local = true)
+      // the lines whose date the formatter rejects: matched, null date
+      val rejected = sqlOff.toSeq.flatten.collect { case r if r(2) != "" && r(10) == null => r.head }.toSet
+      val (bad, good) = lines.partition { case (i, _) => rejected(i) }
+      val goodOff = sqlOff.map(_.filterNot(r => rejected(r.head.asInstanceOf[Long])))
+      (s"ANSI off: kernel $kernelOff, SQL $sqlOff" |: (sqlOff.isRight && kernelOff == sqlOff)) &&
+        (s"ANSI off, interpreted: kernel $kernelOffLocal" |: kernelOffLocal == sqlOff) &&
+        (s"ANSI on, accepted dates" |:
+          (clfRows(ansi = true, good, kernel = true) == goodOff &&
+            clfRows(ansi = true, good, kernel = false) == goodOff)) &&
+        Prop.all(bad.map { l =>
+          s"ANSI on must throw CANNOT_PARSE_TIMESTAMP on $l" |:
+            (cannotParseTimestamp(clfRows(ansi = true, Seq(l), kernel = true, local = true)) &&
+              cannotParseTimestamp(clfRows(ansi = true, Seq(l), kernel = false, local = true)))
+        }: _*)
     }
 
   property("truncating average: floor(sum/n)*n <= sum < floor(sum/n)*n + n") =
